@@ -101,7 +101,7 @@ object MLOps {
 
   /** Largest-|loading| sign convention: flip so the component with the
     * largest absolute value (smallest index on ties) is positive. */
-  private def signFix(w: Array[Double]): Array[Double] = {
+  private[graft] def signFix(w: Array[Double]): Array[Double] = {
     val j = w.indices.maxBy(i => (math.abs(w(i)), -i))
     if (w(j) < 0) w.map(-_) else w
   }

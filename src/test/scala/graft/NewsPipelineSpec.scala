@@ -65,6 +65,25 @@ class NewsPipelineSpec extends SparkSuite {
     assert(clusters.forall(c => c >= 0 && c < 4)) // k = min(5, 4) = 4
   }
 
+  private def cacheEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  test("R4 on a day with fewer than two embedded articles is empty; no path leaves the slice cached") {
+    import spark.implicits._
+    val rows = Seq[(Long, String, Option[Seq[Float]])](
+      (1L, "embedded", Some(Seq(0.5f, -1f, 2f))), (2L, "no embedding", None))
+    val oneEmbedded = rows.toDF("id", "title", "embedding")
+    spark.catalog.clearCache()
+    assert(DailyReport.clustering(oneEmbedded.where(col("id") === 2L)).isEmpty)
+    assert(cacheEmpty, "n == 0 left the embedded slice cached")
+    assert(DailyReport.clustering(oneEmbedded).isEmpty) // threw before: covariance of one row
+    assert(cacheEmpty, "n == 1 left the embedded slice cached")
+    assert(DailyReport.clustering(rows.map { case (i, t, _) => (i, t, Some(Seq(i.toFloat, 1f, 0f))) }
+      .toDF("id", "title", "embedding")).count() == 2)
+    assert(cacheEmpty, "n == 2 left the embedded slice cached")
+  }
+
   test("R5 noun frequencies come from Hangul runs") {
     val day = DailyReport.daySlice(DailyReport.readArchive(spark, fixture), "2025-05-24")
     val r5 = DailyReport.nounFrequencies(day).collect()
